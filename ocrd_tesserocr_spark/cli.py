@@ -90,12 +90,14 @@ def apply_cli_params(params, param_opts, rules_path):
 
 
 def build_parser() -> argparse.ArgumentParser:
+    from .plans import PRESETS
+
+    presets = sorted(PRESETS)
     p = argparse.ArgumentParser(prog="ocrd-tesserocr-spark")
     sub = p.add_subparsers(dest="cmd", required=True)
 
     ex = sub.add_parser("extract", help="run an extraction stage")
-    ex.add_argument("--preset", default="recognize",
-                    help="recognize|segment|sparse|strict_main")
+    ex.add_argument("--preset", default="recognize", choices=presets)
     ex.add_argument("--input", required=True, help="pages parquet/table path")
     ex.add_argument("--output", required=True, help="output snapshot dir")
     ex.add_argument("--partitions", type=int, default=None)
@@ -107,8 +109,8 @@ def build_parser() -> argparse.ArgumentParser:
         "recompute",
         help="re-recognize existing output at a lower level (process_existing)",
     )
-    rc.add_argument("--preset", default="extract")
-    rc.add_argument("--level", default="word", help="word|glyph|line")
+    rc.add_argument("--preset", default="extract", choices=presets)
+    rc.add_argument("--level", default="word", choices=("line", "word", "glyph"))
     rc.add_argument("--input", required=True, help="pages parquet/table path")
     rc.add_argument("--committed", required=True, help="existing stage output dir")
     rc.add_argument("--output", required=True, help="new stage output dir")
@@ -138,7 +140,7 @@ def build_parser() -> argparse.ArgumentParser:
     st.add_argument("--output", required=True, help="append-mode parquet sink")
     st.add_argument("--checkpoint", required=True,
                     help="streaming checkpoint dir (resume point + state store)")
-    st.add_argument("--preset", default="recognize")
+    st.add_argument("--preset", default="recognize", choices=presets)
     st.add_argument(
         "--continuous",
         action="store_true",

@@ -5,8 +5,8 @@ Physical plan (SURVEY.md section 4)::
 
     Scan(pages)                               -- column/partition pruning
     -> Filter (resume anti-join, lang, ...)   -- predicate pushdown
-    -> Exchange hashpartitioning(xxhash64(url, salt), N)   -- explicit salting
-    -> MapInPandas(extract_batch)             -- the whole inner loop
+    -> Exchange hashpartitioning(xxhash64(url, 0), N)  -- only on too few splits
+    -> MapInArrow(make_extract_arrow_fn)      -- the whole inner loop
     -> AppendData(extracted, snapshot=K) + lineage rows    -- atomic-ish commit
 
 At production scale the sink is an Iceberg table and each stage commit is an
@@ -24,10 +24,10 @@ import json
 import os
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from .kernel import make_extract_fn
+from .kernel import make_extract_arrow_fn
 from .oracle import DEFAULT_PARAMS, ExtractParams
 from .schemas import EXTRACTED_SCHEMA, EXTRACTED_USER_COLUMNS, LINEAGE_SCHEMA
 
@@ -48,44 +48,33 @@ def extract(
     pages: DataFrame,
     params: ExtractParams = DEFAULT_PARAMS,
     num_partitions: int | None = None,
-    salt: int = 0,
-    repartition: bool | None = None,
 ) -> DataFrame:
     """pages -> extracted (lazy; no action triggered).
 
-    The single ``mapInPandas`` runs the whole section-2.2 inner loop in one
+    The single ``mapInArrow`` runs the whole section-2.2 inner loop in one
     pass per document — operator fusion mirroring the reference's
     single-pass multi-level segmentation (recognize.py:486-492).
 
-    ``repartition=None`` (auto, round 6): the salted exchange exists for
-    LOAD BALANCE, but it moves the entire html payload through one
-    shuffle — the guide's section-8 anti-pattern — and extraction is
-    embarrassingly parallel.  When the input already provides at least
-    2x core-count partitions (parquet scan splits are size-uniform by
-    construction, better balanced than hash-of-url), the exchange buys
-    nothing and is skipped: measured 1.17x on the 160k-page bench corpus
-    at local[32].  Inputs with too few splits (tiny corpora, post-join
-    plans at the session's shuffle width) keep the skew-defeating
-    repartition exactly as before.
+    The salted exchange exists for LOAD BALANCE, but it moves the entire
+    html payload through one shuffle — the guide's section-8 anti-pattern
+    — and extraction is embarrassingly parallel.  When the input already
+    provides at least 2x core-count partitions (parquet scan splits are
+    size-uniform by construction, better balanced than hash-of-url), the
+    exchange buys nothing and is skipped: measured 1.17x on the 160k-page
+    bench corpus at local[32].  Inputs with too few splits (tiny corpora,
+    post-join plans at the session's shuffle width) keep the
+    skew-defeating repartition into ``num_partitions`` (default: the
+    core count).
     """
+    parallelism = spark.sparkContext.defaultParallelism
     if num_partitions is None:
-        num_partitions = spark.sparkContext.defaultParallelism
+        num_partitions = parallelism
     # explicit pruning: the kernel reads only (url, html) — Catalyst cannot
     # see inside the Python map, so without this select the shuffle would
     # carry every pages column
     pages = pages.select("url", "html")
-    if repartition is None:
-        repartition = (
-            pages.rdd.getNumPartitions()
-            < 2 * spark.sparkContext.defaultParallelism
-        )
-    if repartition:
-        pages = salted_repartition(pages, num_partitions, salt)
-    # mapInArrow: the kernel builds RecordBatches with declared Arrow types
-    # directly — the pandas object-column path costs ~10x on the nested
-    # word/glyph hierarchy (see kernel.make_extract_arrow_fn)
-    from .kernel import make_extract_arrow_fn
-
+    if pages.rdd.getNumPartitions() < 2 * parallelism:
+        pages = salted_repartition(pages, num_partitions)
     return pages.mapInArrow(make_extract_arrow_fn(params), schema=EXTRACTED_SCHEMA)
 
 
@@ -141,15 +130,34 @@ def committed_snapshot_ids(out_dir: str) -> list[int]:
     return [e["snapshot_id"] for e in read_manifest(out_dir)]
 
 
-def read_extracted(spark: SparkSession, out_dir: str) -> DataFrame:
-    """Read only *committed* snapshots (uncommitted partial writes from a
-    killed run are invisible — snapshot isolation, the Iceberg property the
-    manifest emulates)."""
-    ids = committed_snapshot_ids(out_dir)
+def _read_snapshots(spark: SparkSession, out_dir: str, ids: list[int]) -> DataFrame:
     if not ids:
         return spark.createDataFrame([], EXTRACTED_SCHEMA)
     paths = [os.path.join(out_dir, f"snapshot_id={i}") for i in ids]
     return spark.read.schema(EXTRACTED_SCHEMA).parquet(*paths)
+
+
+def read_extracted(spark: SparkSession, out_dir: str) -> DataFrame:
+    """Read only *committed* snapshots (uncommitted partial writes from a
+    killed run are invisible — snapshot isolation, the Iceberg property the
+    manifest emulates)."""
+    return _read_snapshots(spark, out_dir, committed_snapshot_ids(out_dir))
+
+
+def _stage_prologue(
+    spark: SparkSession, pages: DataFrame, out_dir: str, resume: bool
+) -> tuple[int, DataFrame]:
+    """Read ``out_dir``'s manifest once; return the next snapshot id and
+    ``pages`` minus the urls already committed there (when ``resume``)."""
+    os.makedirs(out_dir, exist_ok=True)
+    entries = read_manifest(out_dir)
+    ids = [e["snapshot_id"] for e in entries]
+    if resume and ids:
+        done = _read_snapshots(spark, out_dir, ids).select("url")
+        pages = pages.join(
+            F.broadcast(done) if _small_committed(entries) else done, "url", "left_anti"
+        )
+    return max(ids, default=0) + 1, pages
 
 
 def run_stage(
@@ -169,21 +177,13 @@ def run_stage(
     processes only the remainder, and a killed run leaves no visible
     partial state because visibility requires the manifest commit.
     """
-    os.makedirs(out_dir, exist_ok=True)
-    snapshot_id = (max(committed_snapshot_ids(out_dir)) + 1) if read_manifest(out_dir) else 1
-
-    if resume and committed_snapshot_ids(out_dir):
-        done = read_extracted(spark, out_dir).select("url")
-        small = _small_committed(out_dir)
-        pages = pages.join(F.broadcast(done) if small else done, "url", "left_anti")
-
+    snapshot_id, pages = _stage_prologue(spark, pages, out_dir, resume)
     t0 = time.time()
     extracted = extract(spark, pages, params, num_partitions)
-    return _commit_stage(spark, extracted, out_dir, snapshot_id, stage, t0)
+    return _commit_stage(extracted, out_dir, snapshot_id, stage, t0)
 
 
 def _commit_stage(
-    spark: SparkSession,
     extracted: DataFrame,
     out_dir: str,
     snapshot_id: int,
@@ -191,9 +191,16 @@ def _commit_stage(
     t0: float,
 ) -> dict:
     """Write one snapshot's data + lineage, then the atomic manifest commit
-    (shared by run_stage and recompute_stage)."""
+    (shared by run_stage and recompute_stage).  The manifest's doc and
+    failure counts are observed on the data write itself."""
+    spark = extracted.sparkSession
+    counts = Observation()
     data_path = os.path.join(out_dir, f"snapshot_id={snapshot_id}")
-    extracted.write.mode("overwrite").parquet(data_path)
+    extracted.observe(
+        counts,
+        F.count(F.lit(1)).alias("n"),
+        F.sum(F.col("failed").cast("long")).alias("f"),
+    ).write.mode("overwrite").parquet(data_path)
     wall_ms = int((time.time() - t0) * 1000)
 
     written = spark.read.schema(EXTRACTED_SCHEMA).parquet(data_path)
@@ -201,25 +208,16 @@ def _commit_stage(
     lineage_path = os.path.join(out_dir, "_lineage", f"snapshot_id={snapshot_id}")
     lineage.write.mode("overwrite").parquet(lineage_path)
 
-    counts = written.agg(
-        F.count(F.lit(1)).alias("n"), F.sum(F.col("failed").cast("long")).alias("f")
-    ).collect()[0]
-    _commit_manifest(
-        out_dir,
-        {
-            "snapshot_id": snapshot_id,
-            "stage": stage,
-            "doc_count": counts["n"],
-            "failure_count": counts["f"] or 0,
-            "wall_ms": wall_ms,
-        },
-    )
-    return {
+    observed = counts.get
+    entry = {
         "snapshot_id": snapshot_id,
-        "doc_count": counts["n"],
-        "failure_count": counts["f"] or 0,
+        "stage": stage,
+        "doc_count": observed["n"],
+        "failure_count": observed["f"] or 0,
         "wall_ms": wall_ms,
     }
+    _commit_manifest(out_dir, entry)
+    return {k: v for k, v in entry.items() if k != "stage"}
 
 
 def recompute_stage(
@@ -247,19 +245,12 @@ def recompute_stage(
     """
     import dataclasses
 
-    os.makedirs(out_dir, exist_ok=True)
-    snapshot_id = (max(committed_snapshot_ids(out_dir)) + 1) if read_manifest(out_dir) else 1
-    stage = f"recompute_{level}"
-
     committed = read_extracted(spark, in_dir)
     # only existing outputs are recomputed (the join against committed
     # segmentation); left_semi keeps the pages columns and lets AQE pick
     # broadcast-vs-shuffle for the url set
     subset = pages.join(committed.select("url"), "url", "left_semi")
-    if resume and committed_snapshot_ids(out_dir):
-        done = read_extracted(spark, out_dir).select("url")
-        small = _small_committed(out_dir)
-        subset = subset.join(F.broadcast(done) if small else done, "url", "left_anti")
+    snapshot_id, subset = _stage_prologue(spark, subset, out_dir, resume)
 
     t0 = time.time()
     deeper = dataclasses.replace(params, textequiv_level=level)
@@ -272,7 +263,7 @@ def recompute_stage(
             .join(kept, "url")
             .select(*[f.name for f in EXTRACTED_SCHEMA.fields])
         )
-    return _commit_stage(spark, recomputed, out_dir, snapshot_id, stage, t0)
+    return _commit_stage(recomputed, out_dir, snapshot_id, f"recompute_{level}", t0)
 
 
 def read_lineage(spark: SparkSession, out_dir: str) -> DataFrame:
@@ -290,12 +281,11 @@ def user_view(extracted: DataFrame) -> DataFrame:
 BROADCAST_RESUME_THRESHOLD = 4_000_000
 
 
-def _small_committed(out_dir: str, threshold_rows: int = BROADCAST_RESUME_THRESHOLD) -> bool:
+def _small_committed(entries: list[dict]) -> bool:
     """Broadcast gate for the resume anti-join, decided from the manifest's
     own doc_count accounting (no extra Spark action): under the threshold
     the committed-url set broadcasts (~50 B/url -> well under the 8 GB
     broadcast ceiling at 4M rows); at 10^12-doc scale it is huge and the
     anti-join falls back to a shuffle join, where AQE picks the strategy
     from runtime stats."""
-    total = sum(e.get("doc_count", 0) for e in read_manifest(out_dir))
-    return total <= threshold_rows
+    return sum(e.get("doc_count", 0) for e in entries) <= BROADCAST_RESUME_THRESHOLD

@@ -88,37 +88,44 @@ def test_structural_invariants(extracted_rows):
 def test_parallelism_invariance(spark, pages_small, extracted_rows):
     """Same results at different partition counts — the reference's
     pageparallel config invariance (test/conftest.py:10-43)."""
-    rows2 = extract(spark, pages_small, num_partitions=13, salt=7).collect()
+    rows2 = extract(spark, pages_small, num_partitions=13).collect()
     assert len(rows2) == len(extracted_rows)
     for r in rows2:
         assert extracted_rows[r["url"]]["text"] == r["text"]
 
 
-def test_glyph_preset_round_trip(spark, pages_small):
+def test_glyph_preset_round_trip():
     """textequiv_level='glyph' crosses the Arrow boundary byte-identically:
     glyph ids/spans/choices match the pure-Python oracle per url."""
+    import pyarrow as pa
+
     from ocrd_tesserocr_spark.corpus import pages_records
+    from ocrd_tesserocr_spark.kernel import make_extract_arrow_fn
     from ocrd_tesserocr_spark.oracle import extract_document
     from ocrd_tesserocr_spark.plans import GLYPH
 
     # full corpus is covered at word level above; glyph parity checks a
     # deterministic sample to keep the nested-struct comparison bounded
     recs = pages_records("/root/testdata/sf0.001")[:60]
-    import pandas as pd
-
-    from ocrd_tesserocr_spark.kernel import extract_batches
-
-    pdf = pd.DataFrame(recs)
-    [got] = list(extract_batches(iter([pdf[["url", "html"]]]), GLYPH))
-    for _, row in got.iterrows():
-        exp = extract_document(
-            next(r["html"] for r in recs if r["url"] == row["url"]), GLYPH
-        )
+    batch = pa.record_batch(
+        [pa.array([r["url"] for r in recs]),
+         pa.array([r["html"] for r in recs], pa.binary())],
+        names=["url", "html"],
+    )
+    [got] = list(make_extract_arrow_fn(GLYPH)(iter([batch])))
+    for row, rec in zip(got.to_pylist(), recs, strict=True):
+        assert row["url"] == rec["url"]
+        exp = extract_document(rec["html"], GLYPH)
         for gb, eb in zip(row["blocks"], exp["blocks"]):
-            for gl, el in zip(gb[11], eb["lines"]):
-                for gw, ew in zip(gl[5], el["words"]):
-                    assert [g[3] for g in gw[6]] == [g["text"] for g in ew["glyphs"]]
-                    assert [g[5] for g in gw[6]] == [
+            for gl, el in zip(gb["lines"], eb["lines"]):
+                for gw, ew in zip(gl["words"], el["words"]):
+                    assert [g["text"] for g in gw["glyphs"]] == [
+                        g["text"] for g in ew["glyphs"]
+                    ]
+                    assert [
+                        [(c["text"], c["conf"]) for c in g["choices"]]
+                        for g in gw["glyphs"]
+                    ] == [
                         [(c["text"], c["conf"]) for c in g["choices"]]
                         for g in ew["glyphs"]
                     ]

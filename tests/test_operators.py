@@ -287,6 +287,26 @@ def test_cli_list_presets(capsys):
         assert name in out
 
 
+def test_cli_rejects_unknown_preset_and_level():
+    """Bad --preset/--level values exit at argument parsing, before any
+    SparkSession starts."""
+    import pytest
+
+    from ocrd_tesserocr_spark.cli import build_parser
+
+    paths = ["--input", "in", "--output", "out"]
+    for argv in (
+        ["extract", "--preset", "nope", *paths],
+        ["stream", "--preset", "nope", "--checkpoint", "c", *paths],
+        ["recompute", "--preset", "nope", "--committed", "c", *paths],
+        ["recompute", "--level", "paragraph", "--committed", "c", *paths],
+    ):
+        with pytest.raises(SystemExit):
+            build_parser().parse_args(argv)
+    args = build_parser().parse_args(["recompute", "--level", "glyph", "--committed", "c", *paths])
+    assert (args.preset, args.level) == ("extract", "glyph")
+
+
 def test_font_style_counts(spark, pages_small):
     """P7 analogue: article template wraps single words in <b>/<i>/<code>."""
     from pyspark.sql import functions as F

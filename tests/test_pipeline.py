@@ -50,6 +50,7 @@ def test_resume_skips_done_work(spark, pages_small, tmp_path):
     # idempotent: third run processes nothing
     r3 = run_stage(spark, pages_small, out_dir, num_partitions=4)
     assert r3["doc_count"] == 0
+    assert r3["failure_count"] == 0  # observed sum over no rows is null
 
 
 def test_uncommitted_snapshot_invisible(spark, pages_small, tmp_path):
@@ -101,14 +102,14 @@ def test_resume_broadcast_gate(spark, pages_small, tmp_path):
     manifest's doc_count is under the threshold and shuffles above it."""
     from ocrd_tesserocr_spark.pipeline import (
         _small_committed,
-        extract,
         read_extracted,
+        read_manifest,
     )
     import json as _json
 
     out_dir = str(tmp_path / "extracted")
     run_stage(spark, pages_small.limit(50), out_dir, num_partitions=2)
-    assert _small_committed(out_dir)  # 50 docs committed -> broadcast
+    assert _small_committed(read_manifest(out_dir))  # 50 docs -> broadcast
 
     done = read_extracted(spark, out_dir).select("url")
     plan = pages_small.join(
@@ -123,7 +124,22 @@ def test_resume_broadcast_gate(spark, pages_small, tmp_path):
                     "failure_count": 0, "wall_ms": 0})
     with open(manifest, "w") as f:
         _json.dump(entries, f)
-    assert not _small_committed(out_dir)
+    assert not _small_committed(read_manifest(out_dir))
+
+
+def test_warm_stage_run_job_count(spark, pages_small, tmp_path):
+    """A warm run_stage issues 4 Spark jobs: the data write and the
+    lineage write, each a shuffle-map job plus a write job.  The manifest
+    counts are observed on the data write, not re-aggregated from the
+    written snapshot."""
+    sc = spark.sparkContext
+    run_stage(spark, pages_small, str(tmp_path / "warm"), num_partitions=4)
+    sc.setJobGroup("warm_stage_run", "one warm run_stage")
+    try:
+        run_stage(spark, pages_small, str(tmp_path / "counted"), num_partitions=4)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("warm_stage_run")) == 4
 
 
 def test_connected_components_raises_without_convergence(spark):
@@ -197,7 +213,7 @@ def test_recompute_stage_lower_level(spark, pages_small, tmp_path):
 
 def test_malformed_config_fails_fast_on_driver(spark, pages_small):
     """A malformed extra value or rule predicate must raise at plan time
-    (make_extract_fn), never inside executor tasks."""
+    (make_extract_arrow_fn), never inside executor tasks."""
     import pytest
 
     from ocrd_tesserocr_spark.oracle import ExtractParams

@@ -69,7 +69,8 @@ def test_filter_degenerate_scans_needed_columns_only(spark):
 
 def test_no_python_eval_in_relational_queries(spark):
     """No row-at-a-time Python anywhere: every oracle-checked query except
-    the declared mapInPandas kernels plans pure JVM operators."""
+    the declared Arrow kernels (mapInArrow/mapInPandas) plans pure JVM
+    operators."""
     import __spark_entry__ as entry
 
     ARROW_KERNELS = {"media_meta", "extract_flagship", "extract_block_spans"}
@@ -168,7 +169,9 @@ def test_similarity_fold_casts_whole_array(spark):
 
     plan = _plan(q_cosine_topk(spark, SF_ORACLE))
     assert "array<double>" in plan
-    # no per-element cast inside any fold lambda
+    # the fold zips the already-cast arrays ...
+    assert "zip_with(cast(" in plan
+    # ... and no per-element cast lives inside any fold lambda
     assert "cast(lambda" not in plan
 
 
@@ -178,8 +181,14 @@ def test_glyph_topk_resplit_carries_projection(spark):
     (doc_id, first word) — never the full text column."""
     from ocrd_tesserocr_spark.operators.glyphs import q_glyph_topk
 
-    plan = _plan(q_glyph_topk(spark, SF_ORACLE))
-    assert "RoundRobinPartitioning" in plan
+    import re
+
+    lines = _plan(q_glyph_topk(spark, SF_ORACLE)).splitlines()
+    i = next(i for i, ln in enumerate(lines) if "Exchange RoundRobinPartitioning" in ln)
+    child = lines[i + 1].split("+- ", 1)[1]
+    assert child.startswith("Project ["), child
+    outputs = child[len("Project [") : child.rindex("]")]
+    assert not re.search(r"(^|, )text#\d+(,|$)", outputs), child
 
 
 def test_lm_score_trigrams_not_lambda_built(spark):
